@@ -5,9 +5,10 @@ import graft.quality.DataQualityValidator
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructType}
 
 import java.security.MessageDigest
+import scala.collection.concurrent.TrieMap
 
 /** Parquet-backed versioned feature store with the same API surface as the
   * reference `AdvancedFeatureStore` (`ML Feature Store Pipeline.py:228-541`).
@@ -21,19 +22,23 @@ import java.security.MessageDigest
   *  - `basePath/metadata/manifest-<gen>.json` — the version manifest as a
   *    CAS'd generation chain (the public commit-log idea Delta/Iceberg
   *    use, S4 in SURVEY §2.1): every mutation reads the highest
-  *    generation, applies itself, and attempts to CREATE generation+1
-  *    with `overwrite = false` — the filesystem's exclusive-create is the
-  *    compare-and-swap, so a concurrent writer's commit makes the create
-  *    throw, and the loser re-reads the NEW state and re-applies its
+  *    generation, applies itself, and attempts to publish generation+1
+  *    whole with an atomic no-replace link/rename — that step is the
+  *    compare-and-swap, so a concurrent writer's commit makes it fail,
+  *    and the loser re-reads the NEW state and re-applies its
   *    mutation (no lost update, both commits visible). Readers load the
   *    max generation; superseded generations are garbage-collected a safe
   *    distance behind.
   *
   * Scale posture: feature data only ever moves through distributed
-  * scans/writes; the only `collect` is the serving tail (single user slice),
-  * mirroring the reference's point-lookup semantics. The TTL cache holds
-  * those collected slices, like the reference's `InMemoryCache` of query
-  * results (`:86-111`) — SIZE-GATED: a slice only collects to the driver
+  * scans/writes; only cache slices are ever collected. The TTL cache
+  * holds them, like the reference's `InMemoryCache` of query results
+  * (`:86-111`), and serving reads the whole-version slice that
+  * registration puts there through a per-version `user_id` index — a
+  * point lookup runs no Spark job and plans nothing. Versions whose slice
+  * is not in the cache (over the cap, expired, evicted) serve through the
+  * per-user path: a filtered scan whose single-user slice is cached in
+  * turn. The cache is SIZE-GATED: a slice is only collected
   * when its row count (measured on the same scan that materializes it)
   * is at most `cacheMaxRows`; above the cap the slice is cached as a
   * `persist(MEMORY_AND_DISK)` DataFrame under the same TTL discipline
@@ -69,6 +74,10 @@ final class FeatureStore(
   private val persistCache: TtlCache[String, DataFrame] =
     new TtlCache[String, DataFrame](cacheTtlSeconds,
       onEvict = (df: DataFrame) => { df.unpersist(); () })
+
+  // version → user_id index over that version's cached slice; built on
+  // the first serve, rebuilt when the backend hands back another slice
+  private val sliceIndexes = TrieMap[String, FeatureStore.SliceIndex]()
 
   private val featuresPath = s"$basePath/features"
   private val metadataPath = s"$basePath/metadata"
@@ -122,22 +131,21 @@ final class FeatureStore(
       version: Option[String] = None,
       userIds: Seq[Long] = Nil,
       useCache: Boolean = true): DataFrame = {
-    val v = version.getOrElse(latestVersion()
-      .getOrElse(throw new NoSuchElementException("no feature versions registered")))
+    val v = resolveVersion(version)
     val key = cacheKey(v, userIds)
-    // over-cap slices first (their keys never enter the collected-slice
-    // backend, so its hit/miss counters keep the reference semantics)
-    val fromPersist = if (useCache) persistCache.get(key) else None
-    val result = fromPersist.getOrElse {
-      val fromCache = if (useCache) cache.get(key) else None
-      fromCache match {
+    // over-cap keys live only in the persist cache and never enter the
+    // collected-slice backend, so each lookup counts in exactly one of
+    // the two caches
+    val result =
+      if (!useCache) getFeaturesUncached(v, userIds)
+      else if (persistCache.contains(key))
+        persistCache.get(key)
+          .getOrElse(cacheFill(key, getFeaturesUncached(v, userIds)))
+      else cache.get(key) match {
         case Some((schema, rows)) =>
           spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-        case None =>
-          val df = getFeaturesUncached(v, userIds)
-          if (useCache) cacheFill(key, df) else df
+        case None => cacheFill(key, getFeaturesUncached(v, userIds))
       }
-    }
     monitor.logFeatureAccess(v)
     result
   }
@@ -150,14 +158,39 @@ final class FeatureStore(
   }
 
   /** Point lookup for one user, metadata columns dropped, as a column→value
-    * map. (`serve_features`, `:427-446`.)
+    * map. (`serve_features`, `:427-446`.) When the version's whole slice
+    * is in the cache (registration puts it there), the answer is a binary
+    * search of its `user_id` index — no Spark job, no plan; an id the
+    * index lacks serves None. Otherwise the per-user path scans for this
+    * user. With several rows per user the first in scan order wins, on
+    * both paths.
     */
   def serveFeatures(userId: Long, version: Option[String] = None): Option[Map[String, Any]] = {
-    val df = getFeatures(version, Seq(userId))
-      .drop("feature_version", "created_at")
-    df.limit(1).collect().headOption
-      .map(r => r.getValuesMap[Any](r.schema.fieldNames.toIndexedSeq))
+    val v = resolveVersion(version)
+    val fromSlice = cache.get(cacheKey(v, Nil)).flatMap { case (schema, rows) =>
+      sliceIndex(v, schema, rows).map(_.lookup(rows, userId))
+    }
+    fromSlice match {
+      case Some(served) =>
+        monitor.logFeatureAccess(v)
+        served
+      case None =>
+        val df = getFeatures(Some(v), Seq(userId))
+          .drop(FeatureStore.MetaColumns: _*)
+        df.limit(1).collect().headOption
+          .map(r => r.getValuesMap[Any](r.schema.fieldNames.toIndexedSeq))
+    }
   }
+
+  /** The memoized index of a version's cached slice, built on first use;
+    * None when the slice has no integral `user_id` column to index.
+    */
+  private def sliceIndex(version: String, schema: StructType,
+      rows: Array[Row]): Option[FeatureStore.SliceIndex] =
+    sliceIndexes.get(version).filter(_.builtFrom(rows))
+      .orElse(FeatureStore.SliceIndex.build(schema, rows).map { ix =>
+        sliceIndexes.put(version, ix); ix
+      })
 
   /** (`get_feature_metadata`, `:456-479`.) */
   def getFeatureMetadata(version: String): Option[FeatureMetadata] =
@@ -208,8 +241,7 @@ final class FeatureStore(
       val doomedSet = doomed.toSet
       commitMetadata(rows =>
         rows.filterNot(r => doomedSet.contains(r.feature_version)))
-      cache.clear()
-      persistCache.clear()
+      clearCaches()
     }
     doomed
   }
@@ -324,8 +356,7 @@ final class FeatureStore(
       (touched.toSet -- stillThere).foreach { v =>
         fs.delete(new Path(s"$featuresPath/feature_version=$v"), true)
       }
-      cache.clear()
-      persistCache.clear()
+      clearCaches()
     }
     audit
   }
@@ -358,6 +389,16 @@ final class FeatureStore(
 
   // ---- internals -----------------------------------------------------------
 
+  private def resolveVersion(version: Option[String]): String =
+    version.getOrElse(latestVersion()
+      .getOrElse(throw new NoSuchElementException("no feature versions registered")))
+
+  private def clearCaches(): Unit = {
+    cache.clear()
+    persistCache.clear()
+    sliceIndexes.clear()
+  }
+
   private def cacheKey(version: String, userIds: Seq[Long]): String =
     s"features_${version}_${userIds.sorted.mkString("_")}"
 
@@ -366,9 +407,13 @@ final class FeatureStore(
     * as before (the collect reads the already-materialized blocks, not
     * the source), above it the persisted DataFrame ITSELF is the cache
     * entry — zero driver collect on the over-cap path, ever. Returns the
-    * DataFrame to serve for this call.
+    * DataFrame to serve for this call. A persisted entry the fill
+    * replaces is released first: Spark caches by plan, and the new scan's
+    * plan equals the old one's, so persisting it while the old entry
+    * lives would reuse the old entry's (stale) blocks.
     */
   private def cacheFill(key: String, df: DataFrame): DataFrame = {
+    persistCache.delete(key)
     val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val n = p.count()
     if (n <= cacheMaxRows) {
@@ -401,46 +446,46 @@ final class FeatureStore(
       .foldLeft(-1L)(math.max)
   }
 
-  /** Commit marker: the final line of a COMPLETE manifest. A generation
-    * file that exists without it is a CLAIM whose writer is in flight
-    * (or crashed) — readers walk past it to the newest complete one, and
-    * committers skip OVER it (the crashed claim burns one generation
-    * number, never the chain).
+  /** Commit marker: the final line of a COMPLETE manifest. Generation
+    * files are published whole (see [[publishGeneration]]), so one
+    * without it was left by a crashed writer of an older store version
+    * that created the file before writing it: readers walk past it to
+    * the newest complete one, and committers skip OVER it (the crashed
+    * claim burns one generation number, never the chain).
     */
   private val CommitMark = "#commit"
 
-  /** The filesystem's atomic exclusive create — the CAS primitive. The
-    * Hadoop local filesystem's `create(path, overwrite = false)` is a
-    * non-atomic exists-then-create (two racing writers both pass the
-    * check, measured in StoreSpec before this landed), so the `file:`
-    * scheme routes through POSIX O_CREAT|O_EXCL via nio; everything else
-    * (HDFS: an atomic namenode op) uses the Hadoop call. An object store
-    * would plug a conditional PUT here. Returns false when the
-    * generation was already claimed.
+  /** The compare-and-swap: write `payload` to a private staging file,
+    * then publish it as `path` with an atomic no-replace step, so a
+    * generation file only ever appears complete — a concurrent committer
+    * can never see a half-written generation and commit past it on a
+    * stale base. The `file:` scheme links the staging file into place
+    * (POSIX link(2) fails on an existing name; the Hadoop local
+    * filesystem's rename would silently replace it); everything else
+    * renames (HDFS: an atomic namenode op that refuses an existing
+    * destination). An object store would plug a conditional PUT here.
+    * Returns false when the generation was already taken.
     */
-  private def exclusiveCreate(fs: org.apache.hadoop.fs.FileSystem,
-      path: Path, payload: Array[Byte]): Boolean =
-    if (fs.getScheme == "file") {
-      val nio = java.nio.file.Paths.get(path.toUri.getPath)
-      try {
-        java.nio.file.Files.write(nio, payload,
-          java.nio.file.StandardOpenOption.CREATE_NEW)
-        true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => false
-      }
-    } else {
-      try {
-        val out = fs.create(path, false)
+  private def publishGeneration(fs: org.apache.hadoop.fs.FileSystem,
+      path: Path, payload: Array[Byte]): Boolean = {
+    val staging = new Path(path.getParent,
+      s".staging-${java.util.UUID.randomUUID()}.tmp")
+    try {
+      if (fs.getScheme == "file") {
+        val target = java.nio.file.Paths.get(path.toUri.getPath)
+        val staged = java.nio.file.Paths.get(staging.toUri.getPath)
+        java.nio.file.Files.write(staged, payload)
+        try { java.nio.file.Files.createLink(target, staged); true }
+        catch { case _: java.nio.file.FileAlreadyExistsException => false }
+      } else {
+        val out = fs.create(staging, false)
         try out.write(payload) finally out.close()
-        true
-      } catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-        case e: java.io.IOException
-          if e.getMessage != null && e.getMessage.contains("exists") =>
-          false
+        fs.rename(staging, path)
       }
+    } finally {
+      val _ = fs.delete(staging, false)
     }
+  }
 
   /** Rows of the newest COMPLETE manifest at or below `gen` (skipping
     * in-flight/crashed claims), or Nil for an empty chain.
@@ -476,7 +521,7 @@ final class FeatureStore(
   }
 
   /** Optimistic CAS commit: read the newest complete manifest, apply
-    * `mutate`, exclusive-create the next generation (JSON lines via the
+    * `mutate`, publish the next generation (JSON lines via the
     * Spark encoder, so nested configs/lineage round-trip exactly, sealed
     * by the commit marker). Losing the race means the winner's state is
     * re-read and the mutation re-applied — the standard commit-log
@@ -498,7 +543,7 @@ final class FeatureStore(
       val next = mutate(readCommitted(fs, gen))
       val payload = (next.toDS().toJSON.collect() :+ CommitMark)
         .mkString("\n").getBytes("UTF-8")
-      if (exclusiveCreate(fs, manifestPath(gen + 1), payload)) {
+      if (publishGeneration(fs, manifestPath(gen + 1), payload)) {
         done = true
         val gc = gen - 8
         if (gc >= 0) fs.delete(manifestPath(gc), false)
@@ -512,6 +557,55 @@ final class FeatureStore(
 }
 
 object FeatureStore {
+
+  /** Store-stamped columns that serving drops from a feature row. */
+  private val MetaColumns = Seq("feature_version", "created_at")
+
+  /** `user_id` → row position over one collected version slice: the
+    * distinct ids sorted (8 B each) beside the position of each id's
+    * first row in slice order (4 B each). It refers to its slice weakly,
+    * only to tell whether a later cache read returned the same instance.
+    */
+  private final class SliceIndex(slice: Array[Row], ids: Array[Long],
+      firstRow: Array[Int], names: Array[String], served: Array[Int]) {
+    private val builtFor = new java.lang.ref.WeakReference(slice)
+
+    def builtFrom(rows: Array[Row]): Boolean = builtFor.get eq rows
+
+    def lookup(rows: Array[Row], userId: Long): Option[Map[String, Any]] = {
+      val j = java.util.Arrays.binarySearch(ids, userId)
+      if (j < 0) None
+      else {
+        val row = rows(firstRow(j))
+        Some(served.iterator.map(i => names(i) -> row.get(i)).toMap)
+      }
+    }
+  }
+
+  private object SliceIndex {
+    def build(schema: StructType, rows: Array[Row]): Option[SliceIndex] =
+      Some(schema.fieldNames.indexOf("user_id")).filter(_ >= 0)
+        .filter(u => schema(u).dataType match {
+          case LongType | IntegerType | ShortType | ByteType => true
+          case _ => false
+        })
+        .map { u =>
+          val keyed = rows.indices.filterNot(rows(_).isNullAt(u)).toArray
+          def id(i: Int) = rows(i).getAs[Number](u).longValue
+          val sorted = keyed.map(id)
+          java.util.Arrays.sort(sorted)
+          val ids = sorted.indices
+            .filter(i => i == 0 || sorted(i) != sorted(i - 1)).map(sorted).toArray
+          val firstRow = Array.fill(ids.length)(-1)
+          keyed.foreach { i =>
+            val j = java.util.Arrays.binarySearch(ids, id(i))
+            if (firstRow(j) < 0) firstRow(j) = i
+          }
+          val names = schema.fieldNames
+          new SliceIndex(rows, ids, firstRow, names,
+            names.indices.filterNot(i => MetaColumns.contains(names(i))).toArray)
+        }
+  }
 
   /** Metadata table row (reference DDL `:282-292`); nested values are native
     * Spark types rather than JSON strings.

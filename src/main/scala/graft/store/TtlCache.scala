@@ -10,8 +10,9 @@ import scala.collection.concurrent.TrieMap
   * is `DataFrame.persist`, used separately by callers that re-scan.
   *
   * `onEvict` runs whenever an entry leaves the cache (TTL expiry on get,
-  * delete, clear) — the release hook the store's persist-backed over-cap
-  * cache needs to `unpersist` evicted DataFrames.
+  * delete, clear, or a put that replaces it with a different value) —
+  * the release hook the store's persist-backed over-cap cache needs to
+  * `unpersist` evicted DataFrames.
   */
 final class TtlCache[K, V](ttlSeconds: Long,
     clock: () => Long = () => System.currentTimeMillis(),
@@ -32,11 +33,21 @@ final class TtlCache[K, V](ttlSeconds: Long,
     }
   }
 
-  def put(key: K, value: V): Unit =
-    entries.put(key, (clock() + ttlSeconds * 1000L, value))
+  def put(key: K, value: V): Unit = synchronized {
+    entries.put(key, (clock() + ttlSeconds * 1000L, value)).foreach {
+      case (_, old) =>
+        if (!(old.asInstanceOf[AnyRef] eq value.asInstanceOf[AnyRef])) onEvict(old)
+    }
+  }
 
-  def delete(key: K): Unit =
+  def delete(key: K): Unit = synchronized {
     entries.remove(key).foreach { case (_, v) => onEvict(v) }
+  }
+
+  /** Whether `key` has an entry, expired or not; counts neither a hit nor
+    * a miss.
+    */
+  private[store] def contains(key: K): Boolean = entries.contains(key)
 
   def clear(): Unit = synchronized {
     entries.values.foreach { case (_, v) => onEvict(v) }

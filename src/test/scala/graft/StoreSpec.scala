@@ -2,9 +2,17 @@ package graft
 
 import graft.model.{FeatureConfig, FeatureMetadata}
 import graft.store.{FeatureStore, TtlCache}
+import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+import org.apache.hadoop.util.Progressable
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 class StoreSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -378,5 +386,228 @@ class StoreSpec extends AnyFunSuite {
     val audit = stores.head.eraseUser(uid)
     assert(audit.map(_._1).contains(sample))
     assert(stores(1).listFeatureVersions().size == 3)
+  }
+
+  /** Runs `body` and counts the Spark jobs and query executions it
+    * started. Two marker RDD jobs bracket it in the listener bus's event
+    * order, and the query-execution listener shares that queue, so when
+    * the closing marker arrives every event of `body` has been seen.
+    */
+  private def sparkWork[T](body: => T): (T, Int, Int) = {
+    val sc = spark.sparkContext
+    @volatile var counting = false
+    val jobs = new AtomicInteger
+    val executions = new AtomicInteger
+    val closed = new CountDownLatch(1)
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.job.description")) match {
+          case Some("work-open") => counting = true
+          case Some("work-close") => counting = false; closed.countDown()
+          case _ => if (counting) jobs.incrementAndGet()
+        }
+    }
+    val qeListener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (counting) executions.incrementAndGet()
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        if (counting) executions.incrementAndGet()
+    }
+    def marker(name: String): Unit = {
+      sc.setJobDescription(name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(jobListener)
+    spark.listenerManager.register(qeListener)
+    try {
+      marker("work-open")
+      val result = body
+      marker("work-close")
+      assert(closed.await(60, TimeUnit.SECONDS))
+      (result, jobs.get, executions.get)
+    } finally {
+      sc.removeSparkListener(jobListener)
+      spark.listenerManager.unregister(qeListener)
+    }
+  }
+
+  test("serve: keyed serves of a registered version run 0 Spark jobs and " +
+      "0 query executions, on the first call, on later calls and for an " +
+      "absent id") {
+    val store = freshStore()
+    val v = store.registerFeatures(
+      feats((1L to 50L).map(i => i -> i * 1.5): _*), meta)
+    val (first, firstJobs, firstExecs) = sparkWork(store.serveFeatures(7L, Some(v)))
+    assert(first.map(_("total_amount")).contains(10.5))
+    assert(first.get.keySet == Set("user_id", "total_amount"))
+    assert((firstJobs, firstExecs) == ((0, 0)))
+    val (later, laterJobs, laterExecs) = sparkWork(
+      (1L to 50L).map(u => store.serveFeatures(u, Some(v))))
+    assert(later.map(_.get("total_amount")) == (1L to 50L).map(_ * 1.5))
+    assert((laterJobs, laterExecs) == ((0, 0)))
+    val (absent, absentJobs, absentExecs) = sparkWork(store.serveFeatures(99L, Some(v)))
+    assert(absent.isEmpty)
+    assert((absentJobs, absentExecs) == ((0, 0)))
+    // served from the version slice: the backend counts hits only
+    assert(store.monitoringDashboard("cache_misses") == 0L)
+  }
+
+  test("serve: with duplicate user rows the served row is the one " +
+      "getFeatures(v, Seq(u)).limit(1) returns") {
+    val store = freshStore()
+    val v = store.registerFeatures(feats(1L -> 10.0, 2L -> 20.0, 1L -> 11.0,
+      3L -> 30.0, 2L -> 21.0, 1L -> 12.0), meta)
+    Seq(1L, 2L, 3L).foreach { u =>
+      val expected = store.getFeatures(Some(v), Seq(u), useCache = false)
+        .drop("feature_version", "created_at").limit(1).collect().head
+      assert(store.serveFeatures(u, Some(v)) ==
+        Some(expected.getValuesMap[Any](expected.schema.fieldNames.toIndexedSeq)),
+        s"user $u")
+    }
+  }
+
+  test("serve: after the version slice's TTL expires, serves still answer " +
+      "correctly through the per-user path") {
+    val dir = Files.createTempDirectory("graft-store").toString
+    val store = new FeatureStore(spark, dir, cacheTtlSeconds = 1)
+    val v = store.registerFeatures(feats(1L -> 10.0, 2L -> 20.0), meta)
+    Thread.sleep(1200)
+    val misses = store.monitoringDashboard("cache_misses").asInstanceOf[Long]
+    assert(store.serveFeatures(1L, Some(v)).get("total_amount") == 10.0)
+    assert(store.serveFeatures(2L, Some(v)).get("total_amount") == 20.0)
+    assert(store.serveFeatures(9L, Some(v)).isEmpty)
+    // expired slice and absent per-user slices were misses, not hits
+    assert(store.monitoringDashboard("cache_misses").asInstanceOf[Long] > misses)
+  }
+
+  test("re-registering an over-cap version releases the persisted entry " +
+      "it replaces: later reads see the new registration, still persisted; " +
+      "TtlCache.put evicts a replaced value") {
+    val rows = feats((1 to 10).map(i => i.toLong -> i.toDouble): _*)
+    val capped = new FeatureStore(spark,
+      Files.createTempDirectory("graft-store").toString, cacheMaxRows = 4,
+      clock = { var i = 0; () => { i += 1; f"2024-01-01T00:00:$i%02dZ" } })
+    def stamps(df: org.apache.spark.sql.DataFrame) =
+      df.select("created_at").distinct().collect().map(_.getString(0)).toSeq
+    val v = capped.registerFeatures(rows, meta)
+    val first = capped.getFeatures(Some(v))
+    assert(first.storageLevel != StorageLevel.NONE)
+    assert(stamps(first) == Seq("2024-01-01T00:00:01Z"))
+    assert(capped.registerFeatures(rows, meta) == v)
+    val second = capped.getFeatures(Some(v))
+    assert(second.storageLevel != StorageLevel.NONE && second.count() == 10)
+    assert(stamps(second) == Seq("2024-01-01T00:00:02Z"))
+    // putting the same value again is not a replacement
+    var released = 0
+    val c = new TtlCache[String, AnyRef](60, onEvict = (_: AnyRef) => released += 1)
+    val x = new Object
+    c.put("k", x); c.put("k", x)
+    assert(released == 0)
+    c.put("k", new Object)
+    assert(released == 1)
+  }
+
+  test("dashboard counters are true: under-cap traffic never moves the " +
+      "persist counters, over-cap traffic never moves the backend's") {
+    val store = freshStore()
+    val v = store.registerFeatures(feats(1L -> 1.0, 2L -> 2.0), meta)
+    store.getFeatures(Some(v)).count()
+    store.getFeatures(Some(v), Seq(1L)).count()
+    store.getFeatures(Some(v), Seq(1L)).count()
+    store.serveFeatures(2L, Some(v))
+    store.serveFeatures(3L, Some(v))
+    val dash = store.monitoringDashboard
+    assert(dash("persist_cache_hits") == 0L && dash("persist_cache_misses") == 0L)
+    assert(dash("cache_hits") == 4L && dash("cache_misses") == 1L)
+
+    val capped = new FeatureStore(spark,
+      Files.createTempDirectory("graft-store").toString, cacheMaxRows = 4)
+    val big = capped.registerFeatures(
+      feats((1 to 10).map(i => i.toLong -> i.toDouble): _*), meta)
+    assert(capped.getFeatures(Some(big)).count() == 10)
+    assert(capped.getFeatures(Some(big)).count() == 10)
+    val capDash = capped.monitoringDashboard
+    assert(capDash("persist_cache_hits") == 2L &&
+      capDash("persist_cache_misses") == 0L)
+    assert(capDash("cache_hits") == 0L && capDash("cache_misses") == 0L)
+  }
+
+  test("manifest commit: a writer paused inside its commit loses nothing " +
+      "to a concurrent commit; a crashed writer's unsealed generation " +
+      "file is still read past") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.pausefs.impl", classOf[PausingFileSystem].getName)
+    val dir = Files.createTempDirectory("graft-store-publish").toString
+    var i = 0
+    val direct = new FeatureStore(spark, dir,
+      clock = () => { i += 1; f"2024-01-01T00:00:$i%02dZ" })
+    // the same directory through a filesystem that can hold a writer
+    // after its first file create under metadata/
+    val pausable = new FeatureStore(spark, s"pausefs://$dir",
+      clock = () => "2024-01-01T01:00:00Z")
+    val v0 = direct.registerFeatures(feats(0L -> 1.0), meta)
+    val (held, release) = PausingFileSystem.arm()
+    val claimant = Future(pausable.registerFeatures(feats(1L -> 2.0), meta))
+    try {
+      assert(held.await(120, TimeUnit.SECONDS), "claimant never reached its commit")
+      val v2 = direct.registerFeatures(feats(2L -> 3.0), meta)
+      release.countDown()
+      val v1 = Await.result(claimant, 120.seconds)
+      val listed = direct.listFeatureVersions().map(_.featureVersion)
+      assert(listed.toSet == Set(v0, v1, v2), s"lost commits: ${Set(v0, v1, v2) -- listed}")
+      // a generation file with no commit mark (a writer that crashed
+      // after creating it) is walked past by readers and skipped over
+      // by the next committer
+      val metaDir = new java.io.File(dir, "metadata")
+      val top = metaDir.list().filter(_.startsWith("manifest-")).max
+      val gen = top.stripPrefix("manifest-").stripSuffix(".json").toLong
+      Files.createFile(new java.io.File(metaDir, f"manifest-${gen + 1}%012d.json").toPath)
+      assert(direct.listFeatureVersions().map(_.featureVersion).toSet == Set(v0, v1, v2))
+      val v3 = direct.registerFeatures(feats(3L -> 4.0), meta)
+      assert(pausable.listFeatureVersions().map(_.featureVersion).toSet ==
+        Set(v0, v1, v2, v3))
+    } finally release.countDown()
+  }
+}
+
+/** Local filesystem under the `pausefs` scheme for commit-race specs:
+  * once armed, the first file created under a `metadata/` directory
+  * signals `held` and blocks until `release`. Its rename refuses an
+  * existing destination, as HDFS does.
+  */
+class PausingFileSystem extends RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("pausefs:///")
+  override def getScheme: String = "pausefs"
+
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long, progress: Progressable) = {
+    val out = super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+    if (f.toUri.getPath.contains("/metadata/")) PausingFileSystem.hold()
+    out
+  }
+
+  override def rename(src: Path, dst: Path): Boolean =
+    if (exists(dst) && getFileStatus(dst).isFile) false else super.rename(src, dst)
+}
+
+object PausingFileSystem {
+  @volatile private var gate: Option[(CountDownLatch, CountDownLatch)] = None
+
+  /** Holds the next create under `metadata/`; returns (held, release). */
+  def arm(): (CountDownLatch, CountDownLatch) = synchronized {
+    val g = (new CountDownLatch(1), new CountDownLatch(1))
+    gate = Some(g)
+    g
+  }
+
+  private def hold(): Unit = {
+    val g = synchronized { val g = gate; gate = None; g }
+    g.foreach { case (held, release) =>
+      held.countDown()
+      release.await(120, TimeUnit.SECONDS)
+    }
   }
 }
