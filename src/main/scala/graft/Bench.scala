@@ -65,9 +65,9 @@ object Bench {
       // cap generated whole-stage methods at HotSpot's 8000-bytecode
       // compile limit (DontCompileHugeMethods): over-limit fused
       // methods never reach C2 and churn between interpreted and
-      // deoptimized execution — the round-12 ProbeGcMapAtK
-      // adjudication measured eval_map_at_k bouncing 10→155 s with
-      // per-pass JIT time re-spiking indefinitely at the default
+      // deoptimized execution — the round-12 adjudication (SURVEY
+      // §6.0c, "The JIT fix") measured eval_map_at_k bouncing 10→155 s
+      // with per-pass JIT time re-spiking indefinitely at the default
       // 65535; at 8000 the passes stabilize at 10–16 s with JIT time
       // declining monotonically (46 → 6.7 s over 6 passes).
       // SPARK_GRAFT_HML overrides for A/B work; 0 genuinely skips the
@@ -118,19 +118,20 @@ object Bench {
     def runsFor(name: String): Int =
       runsByFamily.getOrElse(familyOf(name), runs)
     // one UNTIMED warm-up pass per query before the timed min-of-N
-    // (default ON): the round-13 adjudication (ProbeWscg + ProbeGcMapAtK)
-    // showed the eval_map_at_k first-pass storm is C2 warm-up BREADTH
-    // (~125 generated classes compiling while 32 threads run deoptimized
-    // code — no single method exceeds HotSpot's 8000-bytecode limit any
-    // more, and neither CICompilerCount nor tiered-mode changes move it),
+    // (default ON): the round-13 adjudication (SURVEY §6.0d, the
+    // eval_map_at_k compile storm) showed the first-pass storm is C2
+    // warm-up BREADTH (~125 generated classes compiling while 32 threads
+    // run deoptimized code — no single method exceeds HotSpot's
+    // 8000-bytecode limit any more, and neither CICompilerCount nor
+    // tiered-mode changes move it),
     // so min-of-2 was recording 1.5-3x the query's steady-state cost on
     // exactly the widest plans. The warm pass absorbs that one-time JVM
     // cost; the per-query jit delta (recorded over the TIMED passes
     // only) then proves the measured number is compile-clean.
     val warmups = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARM", "1").toInt
 
-    // process-wide JIT compilation time (ms) — the round-12 ProbeGcMapAtK
-    // adjudication showed per-pass JIT time tracking the eval_map_at_k
+    // process-wide JIT compilation time (ms) — the round-12 adjudication
+    // (SURVEY §6.0c) showed per-pass JIT time tracking the eval_map_at_k
     // bounce 1:1; recording the per-QUERY delta makes a single inflated
     // number self-adjudicating (high jit delta → C2 warm-up, high steal
     // delta → hypervisor contention, neither → a real regression)
@@ -141,44 +142,46 @@ object Bench {
       catch { case _: Throwable => -1L }
 
     /** All timed windows for one query plus the COLD first-warm-up wall
-      * (−1 when warmups=0 or the warm-up threw). Each window carries its
-      * OWN steal/JIT deltas so the winner is individually adjudicable.
+      * (−1 when warmups=0). Each window carries its OWN steal/JIT deltas
+      * so the winner is individually adjudicable. A warm-up or timed pass
+      * that throws ends the query as Left(failure): its failure wall is
+      * never recorded as a time.
       */
     def measure(spark: SparkSession, name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (Seq[Window], Double) = {
+        : Either[String, (Seq[Window], Double)] = {
+      // noop sink: full materialization of every output row — count() would
+      // let Catalyst prune projection work on scan-shaped queries
+      def run(): Unit =
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       // settle the heap between queries: without this a query pays for the
       // previous query's garbage and can read 3-4x its solo cost when both
       // min-of-N passes land beside a GC-heavy neighbor
       System.gc()
-      var cold = -1.0
-      (1 to warmups).foreach { i =>
-        val t0 = System.nanoTime()
-        // a THROWING warm-up must not record its (instant) wall as an
-        // implausibly fast cold time — keep the warmups=0 sentinel (-1)
-        // so the artifact distinguishes "failed warm-up" from "fast"
-        val ok =
-          try {
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            true
-          } catch { case _: Throwable => false }
-        if (i == 1 && ok) cold = (System.nanoTime() - t0) / 1e9
+      try {
+        var cold = -1.0
+        (1 to warmups).foreach { i =>
+          val t0 = System.nanoTime()
+          run()
+          if (i == 1) cold = (System.nanoTime() - t0) / 1e9
+        }
+        System.gc()
+        val windows = (1 to runsFor(name)).map { _ =>
+          val s0 = stealJiffies(); val j0 = jitMs()
+          val t0 = System.nanoTime()
+          run()
+          val sec = (System.nanoTime() - t0) / 1e9
+          val s1 = stealJiffies(); val j1 = jitMs()
+          Window(sec,
+            if (s0 < 0 || s1 < 0) -1L else s1 - s0,
+            if (j0 < 0 || j1 < 0) -1L else j1 - j0)
+        }
+        Right((windows, cold))
+      } catch { case e: Throwable =>
+        val msg = Option(e.getMessage).flatMap(_.linesIterator.nextOption())
+          .getOrElse("")
+        Left(s"${e.getClass.getName}: $msg")
       }
-      System.gc()
-      val windows = (1 to runsFor(name)).map { _ =>
-        val s0 = stealJiffies(); val j0 = jitMs()
-        val t0 = System.nanoTime()
-        // noop sink: full materialization of every output row — count() would
-        // let Catalyst prune projection work on scan-shaped queries
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
-        catch { case _: Throwable => () }
-        val sec = (System.nanoTime() - t0) / 1e9
-        val s1 = stealJiffies(); val j1 = jitMs()
-        Window(sec,
-          if (s0 < 0 || s1 < 0) -1L else s1 - s0,
-          if (j0 < 0 || j1 < 0) -1L else j1 - j0)
-      }
-      (windows, cold)
     }
 
     // host-load telemetry: per-family 1-min loadavg (max across the
@@ -188,11 +191,11 @@ object Bench {
     val famLoads = scala.collection.mutable.LinkedHashMap[String, Double]()
 
     /** One sweep over `qs` (fresh session per family when isolating).
-      * Returns name → (all timed windows, cold).
+      * Returns name → [[measure]]'s result.
       */
     def sweep(qs: Seq[(String, (SparkSession, String) =>
         org.apache.spark.sql.DataFrame)])
-        : Seq[(String, (Seq[Window], Double))] =
+        : Seq[(String, Either[String, (Seq[Window], Double)])] =
       if (isolate)
         qs.groupBy { case (n, _) => familyOf(n) }
           .toSeq.sortBy(_._1)
@@ -271,8 +274,13 @@ object Bench {
           "registered queries")
 
     val state = scala.collection.mutable.LinkedHashMap[String, QRec]()
-    initial.foreach { case (n, (ws, cold)) =>
-      state(n) = QRec(best(ws), cold, "initial") }
+    // name → "exception class: first message line"; a failed query has no
+    // time, is never retried, and stays out of `queries` and `total`
+    val failed = scala.collection.mutable.LinkedHashMap[String, String]()
+    initial.foreach {
+      case (n, Right((ws, cold))) => state(n) = QRec(best(ws), cold, "initial")
+      case (n, Left(err)) => failed(n) = err
+    }
 
     def flagged(): Seq[String] =
       state.collect { case (n, r) if r.win.steal > qThr(r.win) => n }
@@ -286,17 +294,19 @@ object Bench {
       val s0 = stealJiffies()
       val rerun = sweep(selected.toSeq.filter { case (n, _) => names(n) })
       attemptSteals += attemptSteal(s0)
-      rerun.foreach { case (n, (ws, _)) =>
-        val w = best(ws)
-        val old = state(n)
-        // min-wall merge: a steal-clean retry at/above the contaminated
-        // minimum CERTIFIES the old number (keep it, but re-stamp the
-        // adjudication with the clean window's steal); a faster retry
-        // replaces it outright
-        if (w.sec < old.win.sec) state(n) = QRec(w, old.cold, prov)
-        else if (w.steal <= qThr(w) && old.win.steal > qThr(old.win))
-          state(n) = QRec(old.win.copy(steal = w.steal, jit = w.jit),
-            old.cold, s"$prov-certified")
+      rerun.foreach {
+        case (n, Left(err)) => state.remove(n); failed(n) = err
+        case (n, Right((ws, _))) =>
+          val w = best(ws)
+          val old = state(n)
+          // min-wall merge: a steal-clean retry at/above the contaminated
+          // minimum CERTIFIES the old number (keep it, but re-stamp the
+          // adjudication with the clean window's steal); a faster retry
+          // replaces it outright
+          if (w.sec < old.win.sec) state(n) = QRec(w, old.cold, prov)
+          else if (w.steal <= qThr(w) && old.win.steal > qThr(old.win))
+            state(n) = QRec(old.win.copy(steal = w.steal, jit = w.jit),
+              old.cold, s"$prov-certified")
       }
     }
     val stillFlagged = flagged()
@@ -314,6 +324,9 @@ object Bench {
     val provQs = results.map { case (k, r) =>
       s"\"" + k + "\":\"" + r.prov + "\"" }.mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.map(_._2.win.sec).sum else 0.0
+    val failedQs = failed.toSeq.sortBy(_._1)
+      .map { case (k, e) => Verify.jsonStr(k) + ":" + Verify.jsonStr(e) }
+      .mkString("{", ",", "}")
     def jnum(d: Double): String = if (d.isNaN) "null" else d.toString
     val loadJson = famLoads.map { case (k, v) => s"\"" + k + "\":" + jnum(v) }
       .mkString("{", ",", "}")
@@ -341,7 +354,7 @@ object Bench {
     val runsFamJson = runsByFamily.toSeq.sortBy(_._1)
       .map { case (f, n) => s"\"" + f + "\":" + n }
       .mkString("{", ",", "}")
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"n_queries":${results.size},"runs":$runs,"runs_by_family":$runsFamJson,"warmups":$warmups,"isolate":$isolate,"sf":"$sfDir","bench_cpus":$cpus,"loadavg1_by_family":$loadJson,"loadavg1_max":${jnum(loadMax)},"steal_jiffies_delta":$stealDeltaTotal,"steal_gated":$stealGated,"qsteal_threshold":$qSteal,"qsteal_rule":"max(base, 1pct of window cpu-jiffies)","retries_used":$retriesUsed,"attempt_steal_deltas":$attemptsJson,"steal_flagged_after_retries":$flaggedJson,"elapsed_sec":$elapsedSec,"provenance_by_query":$provQs,"steal_jiffies_by_query":$stealQs,"jit_ms_by_query":$jitQs,"cold_sec_by_query":$coldQs}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"n_queries":${results.size},"n_failed":${failed.size},"failed_by_query":$failedQs,"runs":$runs,"runs_by_family":$runsFamJson,"warmups":$warmups,"isolate":$isolate,"sf":"$sfDir","bench_cpus":$cpus,"loadavg1_by_family":$loadJson,"loadavg1_max":${jnum(loadMax)},"steal_jiffies_delta":$stealDeltaTotal,"steal_gated":$stealGated,"qsteal_threshold":$qSteal,"qsteal_rule":"max(base, 1pct of window cpu-jiffies)","retries_used":$retriesUsed,"attempt_steal_deltas":$attemptsJson,"steal_flagged_after_retries":$flaggedJson,"elapsed_sec":$elapsedSec,"provenance_by_query":$provQs,"steal_jiffies_by_query":$stealQs,"jit_ms_by_query":$jitQs,"cold_sec_by_query":$coldQs}"""
     // the full line is ~10 KB at 300+ queries and a tail-capture of the
     // process output can truncate its head (round-10's BENCH artifact was
     // unparseable) — persist it to a file FIRST, then print

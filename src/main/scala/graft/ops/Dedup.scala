@@ -99,7 +99,7 @@ object Dedup {
     * sub-vocabulary is alphabet-bounded, ≤ |Σ|^(q(d−1)+1) values.
     * Returns (s_a, s_b, dist), s_a < s_b, dist ≤ maxDist.
     *
-    * Sizing (ProbeEditDist, SURVEY §6.1): gram buckets hold ~vocab/|Σ|^q
+    * Sizing (SURVEY §6.1, edit-distance join): gram buckets hold ~vocab/|Σ|^q
     * values, so Σ bucket² grows quadratically in the vocabulary at fixed
     * q — raise q as the vocabulary grows (q = 3 gives 26³ gram values on
     * a lowercase alphabet) to keep the blocking sub-quadratic; on dense
@@ -321,14 +321,6 @@ object Dedup {
         maxDf), sets, threshold, broadcastSets)
       .select("id_a", "id_b", "n_common", "jaccard")
   }
-
-  /** Candidate (id_a, id_b) pairs of [[jaccardPairs]] before verification —
-    * exposed for probing/pruning-ratio analysis.
-    */
-  def jaccardCandidates(df: DataFrame, idCol: String, textCol: String,
-      threshold: Double, n: Int = 1, maxDf: Long = 0L): DataFrame =
-    jaccardCandidatesFrom(tokenSets(df, idCol, textCol, n), df, idCol,
-      textCol, threshold, n, maxDf)
 
   private def jaccardCandidatesFrom(
       sets: DataFrame,
@@ -589,16 +581,18 @@ object Dedup {
   }
 
   /** Connected components over an undirected pair graph by min-label
-    * propagation: every node starts as its own component; each round a node
-    * takes the minimum label among itself and its neighbors; converged when
-    * the label sum stops decreasing (labels only decrease, so the DECIMAL
-    * sum is a monotone convergence witness — one cheap agg per round, no
-    * row-level diff join). Near-dup graphs are clique-ish, so convergence
-    * is 2–3 rounds; the round count is bounded by graph diameter. Each
-    * round is one join + one group-by — all shuffles on the node id. For
+    * propagation: every node starts as its own component; each hop a node
+    * takes the minimum label among itself and its neighbors, and each
+    * round runs TWO hops; converged when the label sum stops decreasing
+    * (labels only decrease, so the DECIMAL sum is a monotone convergence
+    * witness — one cheap agg per round, no row-level diff join). Near-dup
+    * graphs are clique-ish, so convergence takes ~2 rounds. `maxIter`
+    * rounds carry labels across diameter ≤ 2·maxIter; a graph of
+    * diameter D witnesses its fixpoint after ⌈D/2⌉ + 1 rounds. Each hop
+    * is one join + one group-by — all shuffles on the node id. For
     * web-scale or high-diameter graphs use [[connectedComponentsStars]]
     * (same API, same labeling): O(log n) rounds independent of diameter,
-    * where this variant needs diameter-many rounds.
+    * where this variant needs diameter/2 rounds.
     *
     * @param ids   relation with column `id` (one row per node)
     * @param pairs relation with columns `id_a`,`id_b` (undirected edges)
@@ -661,7 +655,8 @@ object Dedup {
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         s"connectedComponents exhausted maxIter=$maxIter without the " +
           "sum-convergence witness — labels may be partial (graph diameter " +
-          "> maxIter); survivors computed from them will over-count")
+          "> 2·maxIter, two hops per round); survivors computed from them " +
+          "will over-count")
     labels
   }
 
@@ -669,8 +664,9 @@ object Dedup {
     * rewriting (Kiveris et al., "Connected Components in MapReduce and
     * Beyond", SoCC'14) — the web-scale variant of [[connectedComponents]]:
     * round count is O(log n) in the worst case regardless of graph
-    * DIAMETER, where min-label propagation needs diameter-many rounds (a
-    * 1000-link chain needs 1000 propagation rounds but ~10 star rounds).
+    * DIAMETER, where min-label propagation needs diameter-many hops (a
+    * 1000-link chain needs 1000 hops — 500 two-hop rounds — but ~10
+    * star rounds).
     * Each round is two group-bys over the edge list; no per-node label
     * state is carried, so the working set is the (shrinking) edge list
     * itself.
@@ -688,7 +684,8 @@ object Dedup {
     * aggregate, no edge-set anti-join. Same output contract as
     * [[connectedComponents]]: (id, component = min reachable id).
     *
-    * Selection rule (measured, SURVEY §6.1 ProbeStars): use THIS variant
+    * Selection rule (measured, SURVEY §6.1 CC-variant isolation): use
+    * THIS variant
     * by default at scale. On the 50k dup-dense corpus' shared 90.6M
     * verified edge set it produced the identical labeling 2.1× faster
     * than min-label (73 s vs 156 s — its per-round working set is the

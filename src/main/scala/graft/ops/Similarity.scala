@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import scala.util.Random
@@ -263,8 +263,8 @@ object Similarity {
     * [[graft.ops.Ivf]] `sim_ivf_exact` witness pattern, so the
     * registered query stays hash-checked end-to-end through the funnel
     * machinery); partial probes trade boundary-pair recall for
-    * Σ cell-product candidate work (measured in ProbeRound12 /
-    * SURVEY §6.1).
+    * Σ cell-product candidate work (measured in SURVEY §6.1, round-12
+    * operators).
     */
   def bitextMarginFunnel(xs: DataFrame, ys: DataFrame, idCol: String,
       vecCol: String, k: Int, threshold: Double,
@@ -1124,57 +1124,14 @@ object Similarity {
 
   /** The FITTED cell assignment shared by [[dbscanFitted]] and the
     * fitted arm of [[dbscanEdgeRecall]]: [[kmeansFit]]'s exact-DECIMAL
-    * Lloyd, then one more assignment pass replaying its per-round argmin
-    * exactly (exact DECIMAL(14,9)² distance sums over the broadcast k·d
-    * centroid relation, min-struct ties to the smallest cid). Returns
-    * (__id, __cell).
+    * Lloyd, then one more [[lloydAssign]] pass over the fit's final
+    * DECIMAL centroids — the same argmin every Lloyd round runs, so the
+    * cells replay the fit exactly. Returns (__id, __cell).
     */
   private def fittedCells(emb: DataFrame, idCol: String, vecCol: String,
       k: Int, rounds: Int): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    val X9 = DecimalType(12, 9)
-    val Dif = DecimalType(14, 9)
-    // kmeansFit returns a driver-local k·d relation; pivot it to one row
-    // per dim with k centroid columns (the kmeansFit round discipline):
-    // the assignment aggregate reads N·d rows instead of N·d·k and the
-    // argmin is a codegen'd least() over the k per-id sums — identical
-    // addends, identical decimal sum type, bit-identical assignment.
-    val spark = emb.sparkSession
-    val cents = kmeansFit(emb, idCol, vecCol, k, rounds)
-      .select(col("cid"), col("dim"),
-        round(col("centroid"), 9).cast(X9).as("__c9"))
-      .collect().toSeq
-    val wide = cents.groupBy(_.getLong(1)).toSeq.sortBy(_._1).map {
-      case (dim, rs) =>
-        val cs = new Array[Any](k)
-        rs.foreach(r => cs(r.getLong(0).toInt) = r.getDecimal(2))
-        org.apache.spark.sql.Row.fromSeq(dim.toInt +: cs.toSeq)
-    }
-    val centsWide = spark.createDataFrame(
-      java.util.Arrays.asList(wide: _*),
-      org.apache.spark.sql.types.StructType(
-        org.apache.spark.sql.types.StructField("dim",
-          org.apache.spark.sql.types.IntegerType, nullable = false) +:
-        (0 until k).map(i => org.apache.spark.sql.types.StructField(
-          s"__c$i", X9))))
-    val x = emb.select(col(idCol).as("__id"),
-        posexplode(col(vecCol).cast("array<double>"))
-          .as(Seq("dim", "__xd")))
-      .select(col("__id"), col("dim"),
-        round(col("__xd"), 9).cast(X9).as("__x9"))
-    def sq(i: Int) = {
-      val d = (col("__x9") - col(s"__c$i")).cast(Dif)
-      sum(d * d).as(s"__s$i")
-    }
-    val argmin =
-      if (k == 1) lit(0)
-      else least((0 until k).map(i =>
-        struct(col(s"__s$i").as("__dist"), lit(i.toLong).as("cid"))): _*)
-        .getField("cid")
-    x.join(broadcast(centsWide), Seq("dim"))
-      .groupBy("__id")
-      .agg(sq(0), (1 until k).map(sq): _*)
-      .select(col("__id"), argmin.cast("int").as("__cell"))
+    val (x, cents, _) = lloydFit(emb, idCol, vecCol, k, rounds)
+    lloydAssign(x, cents).select(col("id").as("__id"), col("cid").as("__cell"))
   }
 
   /** The clustering core shared by [[dbscan]] and [[dbscanFitted]]:
@@ -1526,7 +1483,8 @@ object Similarity {
     * so a DuckDB oracle replays every round bit-identically. Seeds are
     * the k ids smallest by md5(id) (hash-random yet engine-stable — the
     * library-wide sampling rule). Empty clusters keep their previous
-    * centroid.
+    * centroid. With fewer vectors than k, every vector seeds its own
+    * cluster and the fit returns that many clusters, not k.
     *
     * Per round: one broadcast join of the (id, dim, x) relation against
     * the k·d centroid relation + two partial-aggregable shuffles
@@ -1539,17 +1497,36 @@ object Similarity {
     */
   def kmeansFit(emb: DataFrame, idCol: String, vecCol: String, k: Int,
       rounds: Int): DataFrame = {
+    import org.apache.spark.sql.types.{DoubleType, LongType, StructField,
+      StructType}
+    val (_, cents, sizes) = lloydFit(emb, idCol, vecCol, k, rounds)
+    val out = cents.map { r =>
+      Row(r.getInt(0).toLong, r.getInt(1).toLong,
+        r.getDecimal(2).doubleValue(), sizes.getOrElse(r.getInt(0), 0L))
+    }
+    emb.sparkSession.createDataFrame(java.util.Arrays.asList(out: _*),
+      StructType(Seq(
+        StructField("cid", LongType, nullable = false),
+        StructField("dim", LongType, nullable = false),
+        StructField("centroid", DoubleType),
+        StructField("n_members", LongType, nullable = false))))
+  }
+
+  /** [[kmeansFit]]'s Lloyd rounds. Returns the materialized (id, dim, x9)
+    * points they read, the final centroids as driver-side (cid: Int,
+    * dim: Int, c: DECIMAL(18,9)) rows, and the last round's member count
+    * per non-empty cid.
+    */
+  private def lloydFit(emb: DataFrame, idCol: String, vecCol: String,
+      k: Int, rounds: Int): (DataFrame, Seq[Row], Map[Int, Long]) = {
     require(k >= 1, s"k must be >= 1: $k")
     require(rounds >= 1, s"rounds must be >= 1: $rounds")
     import org.apache.spark.sql.types.DecimalType
     val D9 = DecimalType(18, 9)
-    val X9 = DecimalType(12, 9)
-    val Dif = DecimalType(14, 9)
-    val spark = emb.sparkSession
     val x = emb.select(col(idCol).cast("long").as("id"),
         posexplode(col(vecCol).cast("array<double>")).as(Seq("dim", "__xd")))
       .select(col("id"), col("dim"),
-        round(col("__xd"), 9).cast(X9).as("x9"))
+        round(col("__xd"), 9).cast(DecimalType(12, 9)).as("x9"))
       .localCheckpoint()
     // k hash-smallest ids seed the centroids (row_number over k rows)
     val seeds = x.select("id").distinct()
@@ -1562,92 +1539,76 @@ object Similarity {
     // centroids are a k·d relation by construction — they live on the
     // DRIVER between rounds (LocalRelation), so each Lloyd round below
     // is ONE fused job: assign → fresh-centroid aggregate → k·d-row
-    // collect. The former spelling localCheckpointed BOTH the N-row
-    // assignment AND the centroid iterate every round (2 materialization
-    // jobs + an RDD-backed broadcast rebuild per round; at corpus scale
-    // a full N-row write per round). Arithmetic is unchanged — exact
-    // DECIMAL distance sums, round(mean, 9) — so the fit replays
-    // bit-identically (SimilaritySpec pins).
-    def localCents(df: DataFrame): Seq[org.apache.spark.sql.Row] =
-      df.collect().toSeq
-    var cents: Seq[org.apache.spark.sql.Row] = localCents(
-      seeds.join(x, Seq("id"))
-        .select(col("cid").cast("int").as("cid"),
-          col("dim").cast("int").as("dim"), col("x9").cast(D9).as("c")))
+    // collect, with no per-round N-row materialization
+    var cents: Seq[Row] = seeds.join(x, Seq("id"))
+      .select(col("cid").cast("int").as("cid"),
+        col("dim").cast("int").as("dim"), col("x9").cast(D9).as("c"))
+      .collect().toSeq
     // per-(cid, dim=0) member count of the LAST round's aggregate = the
     // per-cid assignment size (posexplode emits dim 0 for every
     // non-empty vector, and empty vectors never enter x at all)
-    var lastFresh: Seq[org.apache.spark.sql.Row] = Seq.empty
-    // centroids PIVOTED to one row per dim with k decimal columns: the
-    // per-round assignment aggregate then reads N·d rows (one per vector
-    // element) instead of N·d·k join-expanded rows, and the argmin is a
-    // codegen'd least() over the k per-id sums instead of a second
-    // groupBy. Arithmetic is addend-for-addend identical — same
-    // (x9 − c)·cast(Dif) squares, same decimal sum type, and decimal
-    // sums are order-insensitive — so the fit still replays
-    // bit-identically (SimilaritySpec pins).
-    def centsWideRel(rows: Seq[org.apache.spark.sql.Row]): DataFrame = {
-      val wide = rows.groupBy(_.getInt(1)).toSeq.sortBy(_._1).map {
-        case (dim, rs) =>
-          val cs = new Array[Any](k)
-          rs.foreach(r => cs(r.getInt(0)) = r.getDecimal(2))
-          org.apache.spark.sql.Row.fromSeq(dim +: cs.toSeq)
-      }
-      spark.createDataFrame(
-        java.util.Arrays.asList(wide: _*),
-        org.apache.spark.sql.types.StructType(
-          org.apache.spark.sql.types.StructField("dim",
-            org.apache.spark.sql.types.IntegerType, nullable = false) +:
-          (0 until k).map(i => org.apache.spark.sql.types.StructField(
-            s"__c$i", D9))))
-    }
-    def argminCid(k: Int): Column =
-      if (k == 1) lit(0)
-      else least((0 until k).map(i =>
-        struct(col(s"__s$i").as("__dist"), lit(i).as("cid"))): _*)
-        .getField("cid")
+    var lastFresh: Seq[Row] = Seq.empty
     for (_ <- 1 to rounds) {
-      def sq(i: Int) = {
-        val d = (col("x9") - col(s"__c$i")).cast(Dif)
-        sum(d * d).as(s"__s$i")
-      }
-      val assign = x.join(broadcast(centsWideRel(cents)), Seq("dim"))
-        .groupBy("id")
-        .agg(sq(0), (1 until k).map(sq): _*)
-        .select(col("id"), argminCid(k).as("cid"))
-      lastFresh = localCents(assign.join(x, Seq("id"))
+      lastFresh = lloydAssign(x, cents).join(x, Seq("id"))
         .groupBy("cid", "dim")
         .agg(round(sum(col("x9")).cast("double") / count(lit(1)), 9)
             .cast(D9).as("__cn"),
           count(lit(1)).as("__cnt"))
         .select(col("cid").cast("int").as("cid"),
-          col("dim").cast("int").as("dim"), col("__cn"), col("__cnt")))
+          col("dim").cast("int").as("dim"), col("__cn"), col("__cnt"))
+        .collect().toSeq
       // coalesce(fresh, previous) merge on the driver — pure
       // bookkeeping over ≤ k·d rows, no arithmetic
       val freshMap = lastFresh.map(r =>
         (r.getInt(0), r.getInt(1)) -> r.getDecimal(2)).toMap
       cents = cents.map { r =>
         val key = (r.getInt(0), r.getInt(1))
-        org.apache.spark.sql.Row(key._1, key._2,
-          freshMap.getOrElse(key, r.getDecimal(2)))
+        Row(key._1, key._2, freshMap.getOrElse(key, r.getDecimal(2)))
       }
     }
-    val sizeMap = lastFresh.filter(_.getInt(1) == 0)
-      .map(r => r.getInt(0) -> r.getLong(3)).toMap
-    val out = cents.map { r =>
-      org.apache.spark.sql.Row(r.getInt(0).toLong, r.getInt(1).toLong,
-        r.getDecimal(2).doubleValue(),
-        sizeMap.getOrElse(r.getInt(0), 0L))
+    (x, cents, lastFresh.filter(_.getInt(1) == 0)
+      .map(r => r.getInt(0) -> r.getLong(3)).toMap)
+  }
+
+  /** One Lloyd assignment step, shared by every [[kmeansFit]] round and
+    * [[fittedCells]]: each (id, dim, x9) point of `x` goes to its nearest
+    * centroid among `cents` (driver-side (cid, dim, DECIMAL) rows).
+    * Centroids pivot to one broadcast row per dim with one column per
+    * cid, so the aggregate reads N·d rows (one per vector element)
+    * instead of N·d·k join-expanded rows, and the argmin is a codegen'd
+    * least() over the per-id sums instead of a second groupBy. Distances
+    * are EXACT DECIMAL sums of squared diffs, the diff re-bounded to
+    * DECIMAL(14,9); ties go to the smallest cid — addend-for-addend the
+    * oracle's long-form replay. The least() spans only the cids present
+    * in `cents`: with fewer points than k the fit seeds fewer than k
+    * centroids, and an absent cid's all-null distance would sort first
+    * and win every argmin. Returns (id, cid: Int).
+    */
+  private def lloydAssign(x: DataFrame, cents: Seq[Row]): DataFrame = {
+    import org.apache.spark.sql.types.{DecimalType, IntegerType,
+      StructField, StructType}
+    val cids = cents.map(_.getInt(0)).distinct.sorted
+    val wide = cents.groupBy(_.getInt(1)).toSeq.sortBy(_._1).map {
+      case (dim, rs) =>
+        val byCid = rs.map(r => r.getInt(0) -> r.getDecimal(2)).toMap
+        Row.fromSeq(dim +: cids.map(byCid.getOrElse(_, null)))
     }
-    spark.createDataFrame(java.util.Arrays.asList(out: _*),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("cid",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("dim",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("centroid",
-          org.apache.spark.sql.types.DoubleType),
-        org.apache.spark.sql.types.StructField("n_members",
-          org.apache.spark.sql.types.LongType, nullable = false))))
+    val centsWide = x.sparkSession.createDataFrame(
+      java.util.Arrays.asList(wide: _*),
+      StructType(StructField("dim", IntegerType, nullable = false) +:
+        cids.map(i => StructField(s"__c$i", DecimalType(18, 9)))))
+    val dist = cids.map { i =>
+      val d = (col("x9") - col(s"__c$i")).cast(DecimalType(14, 9))
+      sum(d * d).as(s"__s$i")
+    }
+    val argmin =
+      if (cids.size == 1) lit(cids.head)
+      else least(cids.map(i =>
+        struct(col(s"__s$i").as("__dist"), lit(i).as("cid"))): _*)
+        .getField("cid")
+    x.join(broadcast(centsWide), Seq("dim"))
+      .groupBy("id")
+      .agg(dist.head, dist.tail: _*)
+      .select(col("id"), argmin.as("cid"))
   }
 }

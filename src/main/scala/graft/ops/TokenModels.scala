@@ -139,7 +139,7 @@ object TokenModels {
     * residual per DOC keeps all BigDecimal-boxed division work on the
     * doc-count relation; the wide (doc, bucket) relation only ever sees
     * compact long products (measured 8.7 → 1.2 s/round at 1M docs on
-    * local[32], ProbeRound11). The bias is bucket id `buckets` with
+    * local[32], SURVEY §6.1 round-11 operators). The bias is bucket id `buckets` with
     * count `biasCount` on every doc (token-less docs still train it) —
     * feature SCALING, not semantics: with unit bias against token
     * counts of ~50, the boundary offset learns ~50× slower than the
@@ -206,7 +206,7 @@ object TokenModels {
     * occ ⋈ residual gradient join then both reuse this ONE layout —
     * without it every round re-shuffles the full count relation on id
     * (measured 11.3 → 8.7 s/round at 1M docs before the per-doc
-    * quantization; ProbeRound11). Bias rides as bucket `buckets` with
+    * quantization; SURVEY §6.1 round-11 operators). Bias rides as bucket `buckets` with
     * count `biasCount`.
     */
   private[graft] def sgdCounts(docs: DataFrame, idCol: String,

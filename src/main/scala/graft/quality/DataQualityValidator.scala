@@ -34,8 +34,6 @@ final class DataQualityValidator {
     checks += (name -> check); this
   }
 
-  def checkNames: Seq[String] = checks.map(_._1).toSeq
-
   def validate(df: DataFrame): DataQualityMetrics = {
     val cols = df.columns.toSeq
     val numericCols = df.schema.fields

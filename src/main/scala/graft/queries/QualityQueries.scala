@@ -703,8 +703,9 @@ object QualityQueries {
     embedTextDriftFrom(Tables.documents(spark, dir),
       Tables.embeddings(spark, dir))
 
-  /** [[embedTextDrift]] over explicit relations — the ProbeRound16 /
-    * spec seam, mirroring [[textEmbedDriftFrom]].
+  /** [[embedTextDrift]] over explicit relations — the seam the 10×
+    * scale measurement (SURVEY §6.1, round 16) and the specs use,
+    * mirroring [[textEmbedDriftFrom]].
     */
   private[graft] def embedTextDriftFrom(docs: DataFrame,
       emb: DataFrame): DataFrame = {

@@ -542,12 +542,12 @@ object SimilarityQueries {
     * ([[graft.ops.Similarity.bitextMarginFunnel]]) between the en and es
     * documents over their embeddings (vec_id ↔ doc_id): cell-bounded
     * candidate generation → ratio margin at k=[[BitextK]], mined at ≥
-    * [[BitextThreshold]], mutual-best flagged. Probes ALL [[semAnchors]]
-    * cells, which degenerates to the exact cross BY CONSTRUCTION (the
+    * [[BitextThreshold]], mutual-best flagged. The probe covers ALL
+    * [[semAnchors]] cells, which degenerates to the exact cross BY CONSTRUCTION (the
     * `sim_ivf_exact` witness pattern), so the funnel machinery itself is
     * hash-checked against the exact-replay oracle; partial-probe
-    * candidate volume and recall are pinned in SimilaritySpec +
-    * ProbeRound12 (SURVEY §6.1).
+    * candidate volume and recall are pinned in SimilaritySpec and
+    * measured in SURVEY §6.1 (round-12 operators).
     */
   def bitextMargin(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)

@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 /** Custom keyed state via `mapGroupsWithState` — the Structured Streaming
   * extension point for semantics windows can't express: here, lifetime
@@ -44,15 +44,4 @@ object StatefulOps {
           next
       }
   }
-
-  /** Convenience: DataFrame-in, DataFrame-out wrapper. */
-  def runningUserProfilesDf(events: DataFrame): DataFrame = {
-    import events.sparkSession.implicits._
-    runningUserProfiles(
-      events.selectExpr("CAST(user_id AS LONG)", "CAST(value AS DOUBLE)")
-        .as[(Long, Double)]).toDF()
-  }
-
-  /** The output mode this operator requires downstream. */
-  val RequiredOutputMode: OutputMode = OutputMode.Update()
 }

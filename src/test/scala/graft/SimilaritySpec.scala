@@ -486,6 +486,23 @@ class SimilaritySpec extends AnyFunSuite {
     assert(run(emb.repartition(13)) == run(emb.coalesce(1)))
   }
 
+  test("kmeansFit: k above the vector count fits one cluster per vector, " +
+      "each with its own member") {
+    val spark2 = spark
+    import spark2.implicits._
+    // 3 vectors seed only cids 0-2 of k = 5; an absent cid must never win
+    // the argmin, so every vector stays with its own seed
+    val emb = Seq((1L, Seq(0.0f, 0.0f)), (2L, Seq(1.0f, 1.0f)),
+      (3L, Seq(5.0f, 5.0f))).toDF("vec_id", "embedding")
+    val r = Similarity.kmeansFit(emb, "vec_id", "embedding", 5, 2)
+      .orderBy("cid", "dim").collect()
+    val byCid = r.groupBy(_.getAs[Long]("cid"))
+    assert(byCid.keySet == Set(0L, 1L, 2L))
+    assert(r.forall(_.getAs[Long]("n_members") == 1L))
+    assert(byCid.values.map(_.map(_.getAs[Double]("centroid")).toSeq).toSet ==
+      Set(Seq(0.0, 0.0), Seq(1.0, 1.0), Seq(5.0, 5.0)))
+  }
+
   test("bitextMargin: hand-computed ratio margins, mutual-best flags, " +
       "threshold filters") {
     val spark2 = spark
@@ -686,6 +703,31 @@ class SimilaritySpec extends AnyFunSuite {
       r == "core" && c == 7L })
     assert(out.drop(12).forall { case (_, r, c) =>
       r == "noise" && c == -1L })
+  }
+
+  test("dbscanFitted: k above the vector count leaves each distinct " +
+      "vector in its own fitted cell") {
+    // ids 1 and 2 share a vector, id 3 is 1 degree off, id 4 opposite;
+    // k = 6 > 4 vectors, so the fitted cells are {1, 2}, {3}, {4}: the
+    // tau = 0.99 edges 1-3 and 2-3 cross cells and only 1-2 survives
+    def v(deg: Double) = Array(
+      math.cos(math.toRadians(deg)), math.sin(math.toRadians(deg)))
+      .map(_.toFloat)
+    val emb2 = Seq((1L, v(0.0)), (2L, v(0.0)), (3L, v(1.0)), (4L, v(180.0)))
+      .toDF("vec_id", "embedding")
+    val out = Similarity.dbscanFitted(emb2, "vec_id", "embedding",
+        tau = 0.99, minPts = 1, k = 6, rounds = 2)
+      .orderBy("vec_id").collect()
+      .map(r => (r.getAs[Long]("vec_id"), r.getAs[String]("role"),
+        r.getAs[Long]("cluster"))).toSeq
+    assert(out == Seq((1L, "core", 1L), (2L, "core", 1L),
+      (3L, "noise", -1L), (4L, "noise", -1L)))
+    val fitted = Similarity.dbscanEdgeRecall(emb2, "vec_id", "embedding",
+        tau = 0.99, anchors = Array(Array(1, 1), Array(1, -1)),
+        fittedK = 6, fittedRounds = 2)
+      .filter(col("method") === "fitted").collect()
+    assert(fitted.length == 1)
+    assert(fitted(0).getLong(2) == 3L && fitted(0).getLong(3) == 1L)
   }
 
   test("mrlFidelity: full-width prefix overlaps exactly 1 everywhere; " +

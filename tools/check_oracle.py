@@ -6,6 +6,8 @@ Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
 Loads every <name>.parquet under verifyOutDir (written by graft.Verify),
 runs the matching SQL from oracle_sql.json in DuckDB against the sfDir
 tables, sorts columns by name and rows by all columns, and compares values.
+Every oracle_sql.json key without an output directory counts as a failure
+(`missing`). Exits non-zero on any failure.
 """
 import json, sys, glob, os
 import duckdb
@@ -76,6 +78,12 @@ def main(sf_dir: str, out_dir: str) -> int:
             n_pass += 1
         else:
             print(f"✗ {name}: " + " | ".join(status[:3]))
+            n_fail += 1
+    # a query that threw in Verify leaves no directory: an oracle key with
+    # no result is a failure, never a silent skip
+    for name in sorted(oracle):
+        if not os.path.isdir(f"{out_dir}/{name}"):
+            print(f"✗ {name}: missing")
             n_fail += 1
     print(f"== {n_pass} pass, {n_fail} fail ==")
     return 1 if n_fail else 0
